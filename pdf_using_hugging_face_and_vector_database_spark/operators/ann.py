@@ -5,10 +5,11 @@ Three tools:
 
 - :class:`IvfIndex` — IVF (inverted-file) coarse quantization, the
   batch "vector index build" the north star names. Deterministic
-  seeded centroids refined by Lloyd iterations, every step a
-  DataFrame op: assignment is an argmax over a broadcast centroid
-  literal (pure SQL, codegen'd), centroid update is one groupBy with
-  per-component ``avg``. Query probes the ``nprobe`` nearest cells
+  seeded centroids refined by Lloyd iterations, one job each: every
+  partition assigns its rows (numpy matmul + argmax, the same kernel
+  as the final assignment) and emits per-cell (count, sum vector)
+  partials from a ``mapInPandas`` — no shuffle — which the driver adds
+  up and normalises. Query probes the ``nprobe`` nearest cells
   and re-ranks exactly — scanning ~nprobe/k of the corpus. At 100 TB
   the table is written partitioned by ``cell`` so a probe prunes
   whole partitions.
@@ -30,7 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import MAX24, det_embed_py
-from ..functions.vector import cosine, dot
+from ..functions.vector import cosine
 
 # persisted-index root (generated data, gitignored): the build/probe
 # split writes the assigned table here partitioned by cell, so a probe
@@ -44,41 +45,105 @@ INDEX_ROOT = os.environ.get(
 )
 
 
-def _centroid_lit(centroids: list[list[float]]) -> Column:
-    return F.array(
-        *[F.array(*[F.lit(float(x)) for x in c]) for c in centroids]
-    )
+def _vector_matrix(vecs: pd.Series, dim: int) -> np.ndarray:
+    """Stack an Arrow batch of vectors into a float64 (batch x dim)
+    matrix, failing fast on a vector whose length is not the index's
+    ``dim`` (a ragged batch otherwise surfaces as a NumPy shape error
+    that names neither width)."""
+    if not len(vecs):
+        return np.empty((0, dim), dtype="float64")
+    widths = vecs.str.len()
+    bad = widths[widths != dim]
+    if len(bad):
+        w = "null" if pd.isna(bad.iloc[0]) else int(bad.iloc[0])
+        raise ValueError(f"IVF index dim {dim} but a vector has width {w}")
+    return np.stack(vecs.to_numpy()).astype("float64", copy=False)
 
 
-def ivf_assign_expr(centroids: list[list[float]], vec_col: Column | str) -> Column:
-    """1-based index of the max-dot-product centroid (ties -> first).
-
-    Pure SQL: transform over the centroid literal + array_position of
-    the max — no Python in the executor path. NOTE: array higher-order
-    functions are CodegenFallback (interpreted) — ~1 ms/row at k=16,
-    dim=64. Kept as the expression-only reference; the index uses
-    :func:`ivf_assign_udf` (Arrow-batched numpy matmul, ~1000x the
-    throughput and the shape a 100 TB assignment job actually wants).
-    """
-    vec_col = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    scores = F.transform(_centroid_lit(centroids), lambda c: dot(vec_col, c))
-    return F.array_position(scores, F.array_max(scores)).cast("int")
+def assign_cells(M: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """0-based max-dot-product cell per row of ``M`` (batch x dim)
+    against ``C`` (dim x k), ties -> lowest cell (argmax keeps the
+    first). The one assignment kernel: the Lloyd partials and the
+    final/append assignment both call it, so they cannot drift."""
+    return (M @ C).argmax(axis=1)
 
 
 def ivf_assign_udf(centroids: list[list[float]]) -> Column:
     """Vectorized cell assignment: one (batch x dim) @ (dim x k)
-    matmul per Arrow batch, argmax per row (ties -> first, same as
-    ivf_assign_expr). Returns a callable to apply to the vector col."""
+    matmul per Arrow batch (:func:`assign_cells`), as a 1-based int.
+    Returns a callable to apply to the vector col."""
     from pyspark.sql.functions import pandas_udf
 
     C = np.asarray(centroids, dtype="float64").T  # dim x k
 
     @pandas_udf("int")
     def assign(s: pd.Series) -> pd.Series:
-        M = np.array(s.tolist(), dtype="float64")  # batch x dim
-        return pd.Series((M @ C).argmax(axis=1) + 1).astype("int32")
+        cells = assign_cells(_vector_matrix(s, C.shape[0]), C) + 1
+        return pd.Series(cells).astype("int32")
 
     return assign
+
+
+def lloyd_partials(centroids: list[list[float]], vec_col: str):
+    """Per-partition half of one Lloyd iteration, for ``mapInPandas``:
+    assign every row (:func:`assign_cells`) and emit one row per
+    non-empty cell — (1-based cell, row count, float64 sum vector).
+    An empty partition emits nothing (an empty untyped frame would not
+    convert to Arrow)."""
+    C = np.asarray(centroids, dtype="float64").T  # dim x k
+    dim, k = C.shape
+
+    def partials(batches):
+        counts = np.zeros(k, dtype="int64")
+        totals = np.zeros((k, dim), dtype="float64")
+        for pdf in batches:
+            M = _vector_matrix(pdf[vec_col], dim)
+            cells = assign_cells(M, C)
+            for c in np.unique(cells):
+                totals[c] += M[cells == c].sum(axis=0)
+            counts += np.bincount(cells, minlength=k)
+        hit = np.flatnonzero(counts)
+        if len(hit):
+            yield pd.DataFrame(
+                {
+                    "cell": (hit + 1).astype("int32"),
+                    "n": counts[hit],
+                    "total": list(totals[hit]),
+                }
+            )
+
+    return partials
+
+
+def lloyd_step(
+    df: DataFrame, vec_col: str, centroids: list[list[float]]
+) -> list[list[float]]:
+    """One Lloyd iteration as ONE job: a shuffle-free ``mapInPandas``
+    of per-partition cell partials, collected (at most partitions x k
+    rows) and added up driver-side. Each cell's new centroid is its
+    normalised sum (the mean's direction); an empty cell keeps its
+    previous centroid."""
+    k, dim = len(centroids), len(centroids[0])
+    counts = np.zeros(k, dtype="int64")
+    totals = np.zeros((k, dim), dtype="float64")
+    rows = (
+        df.select(vec_col)
+        .mapInPandas(
+            lloyd_partials(centroids, vec_col), "cell int, n long, total array<double>"
+        )
+        .collect()
+    )
+    for r in rows:
+        counts[r["cell"] - 1] += r["n"]
+        totals[r["cell"] - 1] += np.asarray(r["total"], dtype="float64")
+    new = []
+    for i in range(k):
+        if not counts[i]:
+            new.append(centroids[i])
+            continue
+        norm = float(np.sqrt(totals[i] @ totals[i])) or 1.0
+        new.append((totals[i] / norm).tolist())
+    return new
 
 
 class IvfIndex:
@@ -92,53 +157,34 @@ class IvfIndex:
         self.assigned: DataFrame | None = None
 
     def fit(self, df: DataFrame, vec_col: str = "embedding") -> "IvfIndex":
-        # each Lloyd iteration collects means over df — persist for the
-        # duration of the loop so the input lineage is paid one scan,
-        # not once per iteration (r10 review), then UNPERSIST before
-        # returning: Spark's CacheManager substitutes a cached plan
-        # into EVERY matching query globally, so leaving the raw input
-        # cached leaks an InMemoryRelation into unrelated consumers of
-        # the same table and kills their scan pushdown (caught by the
-        # plan pins when this persist was first left unscoped)
-        df = df.persist()
+        # each Lloyd iteration scans df once — with two or more, persist
+        # for the duration of the loop so the input lineage is paid one
+        # scan, not once per iteration; with one, the loop's single job
+        # is the only read the cache could serve, so it is skipped.
+        # UNPERSIST before returning: Spark's CacheManager substitutes a
+        # cached plan into EVERY matching query globally, so leaving the
+        # raw input cached leaks an InMemoryRelation into unrelated
+        # consumers of the same table and kills their scan pushdown
+        cached = self.iters >= 2
+        if cached:
+            df = df.persist()
         # deterministic seeds in the same hash-projection space
         centroids = [det_embed_py(f"centroid:{i}", self.dim) for i in range(self.k)]
         try:
             for _ in range(self.iters):
-                assigned = df.withColumn("cell", ivf_assign_udf(centroids)(F.col(vec_col)))
-                # per-component mean per cell: ONE shuffle, 'dim' avg aggs
-                means = assigned.groupBy("cell").agg(
-                    *[
-                        F.avg(F.element_at(F.col(vec_col), j + 1)).alias(f"c{j}")
-                        for j in range(self.dim)
-                    ]
-                )
-                rows = {
-                    r["cell"]: [r[f"c{j}"] for j in range(self.dim)]
-                    for r in means.collect()
-                }
-                new = []
-                for i in range(self.k):
-                    c = rows.get(i + 1)
-                    if c is None:
-                        new.append(centroids[i])  # empty cell keeps its seed
-                        continue
-                    norm = sum(x * x for x in c) ** 0.5 or 1.0
-                    new.append([x / norm for x in c])
-                centroids = new
+                centroids = lloyd_step(df, vec_col, centroids)
             self.centroids = centroids
             self.assigned = df.withColumn(
                 "cell", ivf_assign_udf(centroids)(F.col(vec_col))
             )
         finally:
             # the assignment is written by the caller AFTER this cache
-            # is gone — one fresh scan, same as pre-r10; the loop's
-            # collects above are what the persist buys. finally (r10
-            # ADVICE): an exception mid-loop (UDF failure) must not
-            # leak the cached plan into the global CacheManager, which
-            # would substitute an InMemoryRelation into every other
-            # query's scan of the same table and kill their pushdown.
-            df.unpersist()
+            # is gone — one fresh scan; the loop's jobs are what the
+            # persist buys. finally: an exception mid-loop (kernel
+            # failure) must not leak the cached plan into the global
+            # CacheManager either
+            if cached:
+                df.unpersist()
         return self
 
     def probe_cells(self, query_vec: Sequence[float], nprobe: int) -> list[int]:
@@ -189,22 +235,6 @@ def topk_in_cells(
         "score", cosine(F.col(vec_col), query_vector_lit(query_vec))
     )
     return scored.orderBy(F.desc("score"), F.col(id_col)).limit(k).drop("cell")
-
-
-def ann_topk_ivf(
-    corpus: DataFrame,
-    query_vec: Sequence[float],
-    k: int = 10,
-    dim: int = 64,
-    n_cells: int = 16,
-    nprobe: int = 6,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """One-shot IVF ANN top-k (build + probe). For repeated queries,
-    use :func:`build_ivf_index` once and :func:`probe_ivf_index`."""
-    idx = IvfIndex(k=n_cells, iters=2, dim=dim).fit(corpus, vec_col)
-    return idx.query(query_vec, k=k, nprobe=nprobe, vec_col=vec_col, id_col=id_col)
 
 
 def dataset_dir_key(sf_dir: str) -> str:
@@ -429,19 +459,20 @@ def append_ivf_index(
         raise FileNotFoundError(f"no readable index marker at {marker}")
     if tag in meta.get("appends", {}):
         return 0
-    from ..caching import persist_tracked
+    from pyspark.sql import Observation
 
-    # count + write both reference the assignment — persist so the
-    # Arrow-batched assignment UDF runs once, not twice (r10 review)
-    assigned = persist_tracked(
-        new_vectors.withColumn(
-            "cell", ivf_assign_udf(meta["centroids"])(F.col(vec_col))
-        )
-    )
-    n = assigned.count()
+    # the row count rides the append WRITE as an Observation: one job,
+    # the assignment UDF runs once and nothing stays cached. The write
+    # is a single stage (no shuffle), so no fetch-failure stage retry
+    # can double-report the observed count
+    obs = Observation("ivf_append")
+    assigned = new_vectors.withColumn(
+        "cell", ivf_assign_udf(meta["centroids"])(F.col(vec_col))
+    ).observe(obs, F.count(F.lit(1)).alias("n"))
     assigned.write.mode("append").partitionBy("cell").parquet(
         os.path.join(path, "assigned")
     )
+    n = obs.get["n"]
     meta.setdefault("appends", {})[tag] = n
     write_marker_atomic(marker, meta)
     return n

@@ -469,8 +469,9 @@ def test_mmr_select_skips_nan_candidates(spark):
 
 
 def test_ivf_fit_unpersists_on_midloop_failure(spark, monkeypatch):
-    """r10 ADVICE: IvfIndex.fit persists its input for the Lloyd loop;
-    an exception mid-loop must not leak the cached plan into the
+    """r10 ADVICE: IvfIndex.fit persists its input for a Lloyd loop of
+    two or more iterations; an exception mid-loop (here the
+    per-partition kernel) must not leak the cached plan into the
     global CacheManager (which would substitute an InMemoryRelation
     into every other query's scan of the same table and kill their
     pushdown) — the unpersist sits in a finally block."""
@@ -485,13 +486,95 @@ def test_ivf_fit_unpersists_on_midloop_failure(spark, monkeypatch):
     vecs = [(i, det_embed_py(f"v{i}", 8)) for i in range(20)]
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
 
-    def boom(_centroids):
-        raise RuntimeError("mid-loop UDF failure")
+    def boom(_centroids, _vec_col):
+        raise RuntimeError("mid-loop kernel failure")
 
-    monkeypatch.setattr(ann, "ivf_assign_udf", boom)
+    monkeypatch.setattr(ann, "lloyd_partials", boom)
     with pytest.raises(RuntimeError, match="mid-loop"):
         ann.IvfIndex(k=2, iters=2, dim=8).fit(df)
     assert not df.storageLevel.useMemory and not df.storageLevel.useDisk
+
+
+def _np_lloyd(X, k, iters):
+    """NumPy Lloyd reference for IvfIndex.fit: det_embed_py seeds,
+    argmax ties to the lowest cell, normalised cell sums, an empty
+    cell keeps its centroid."""
+    C = np.array([det_embed_py(f"centroid:{i}", X.shape[1]) for i in range(k)])
+    for _ in range(iters):
+        cells = (X @ C.T).argmax(axis=1)
+        for i in range(k):
+            if (cells == i).any():
+                s = X[cells == i].sum(axis=0)
+                C[i] = s / np.linalg.norm(s)
+    return C, (X @ C.T).argmax(axis=1) + 1
+
+
+def _ivf_frame(spark, X):
+    return spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(X)],
+        "vec_id long, embedding array<double>",
+    )
+
+
+def test_ivf_fit_matches_numpy_lloyd(spark):
+    """The per-partition Lloyd kernel reproduces a NumPy Lloyd loop to
+    1e-12 over two iterations, final cells included; the planted
+    corpus sits near the first three seeds, so the fourth cell stays
+    empty and keeps its seed exactly."""
+    dim, k = 16, 4
+    seeds = [np.array(det_embed_py(f"centroid:{i}", dim)) for i in range(3)]
+    X = np.array(
+        [
+            seeds[i % 3] + 0.2 * np.array(det_embed_py(f"noise:{i}", dim))
+            for i in range(60)
+        ]
+    )
+    X /= np.linalg.norm(X, axis=1, keepdims=True)
+    want, want_cells = _np_lloyd(X, k, 2)
+    assert not (want_cells == k).any()  # the planted empty cell
+    idx = IvfIndex(k=k, iters=2, dim=dim).fit(_ivf_frame(spark, X).repartition(3))
+    assert np.abs(np.array(idx.centroids) - want).max() <= 1e-12
+    assert idx.centroids[k - 1] == det_embed_py(f"centroid:{k - 1}", dim)
+    got = {r.vec_id: r.cell for r in idx.assigned.collect()}
+    assert [got[i] for i in range(len(X))] == want_cells.tolist()
+
+
+def test_ivf_fit_empty_partitions_and_cells(spark):
+    """Three rows over eight partitions with four cells: empty
+    partitions emit no partials, and the cells no row reaches keep
+    their seeds."""
+    dim, k = 8, 4
+    X = np.array([det_embed_py(f"few:{i}", dim) for i in range(3)])
+    want, want_cells = _np_lloyd(X, k, 2)
+    idx = IvfIndex(k=k, iters=2, dim=dim).fit(_ivf_frame(spark, X).repartition(8))
+    assert np.abs(np.array(idx.centroids) - want).max() <= 1e-12
+    got = {r.vec_id: r.cell for r in idx.assigned.collect()}
+    assert [got[i] for i in range(3)] == want_cells.tolist()
+
+
+def test_ivf_fit_one_job_per_lloyd_iteration(spark):
+    """Each Lloyd iteration is one Spark job (no shuffle stage, no
+    separate count); the final assignment stays lazy."""
+    X = np.array([det_embed_py(f"j:{i}", 8) for i in range(40)])
+    df = _ivf_frame(spark, X)
+    sc = spark.sparkContext
+    for iters in (1, 2):
+        group = f"ivf_fit_jobs_{iters}"
+        sc.setJobGroup(group, group)
+        try:
+            IvfIndex(k=4, iters=iters, dim=8).fit(df)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == iters
+
+
+def test_ivf_fit_rejects_vector_width(spark):
+    """A vector whose length is not the index dim fails in the kernel
+    with both widths named."""
+    X = np.array([det_embed_py(f"w:{i}", 16) for i in range(10)])
+    with pytest.raises(Exception, match="IVF index dim 8 but a vector has width 16"):
+        IvfIndex(k=2, iters=1, dim=8).fit(_ivf_frame(spark, X))
 
 
 def test_brp_lsh_survives_zero_vector(spark):
