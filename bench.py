@@ -305,28 +305,42 @@ class _EventLogReader:
                 m["input_mb"] += im.get("Bytes Read", 0) / 1e6
 
 
+# free space /dev/shm must have before the event log goes there (the
+# same floor as perfbench's); a full tmpfs would fail the sweep's
+# writes, not only the log's
+EVENTLOG_SHM_MIN_FREE_BYTES = 2 * 2**30
+
+
 def _eventlog_dir() -> str | None:
     """Scratch location for the bench's event log (fresh per sweep).
-    Prefers tmpfs so log writes never touch the contended data disk;
-    returns None (metrics disabled) when the opt-out is set."""
+    Prefers tmpfs, when it has room, so log writes never touch the
+    contended data disk; returns None (metrics disabled) when the
+    opt-out is set."""
     if os.environ.get("SPARK_GRAFT_BENCH_EVENTLOG", "1") == "0":
         return None
     import shutil as _sh
 
-    root = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
+    root = "/tmp"
+    if (
+        os.path.isdir("/dev/shm")
+        and _sh.disk_usage("/dev/shm").free >= EVENTLOG_SHM_MIN_FREE_BYTES
+    ):
+        root = "/dev/shm"
     d = os.path.join(root, "sparkgraft_evlog_bench")
     _sh.rmtree(d, ignore_errors=True)
     os.makedirs(d, exist_ok=True)
     return d
 
 
-def _bus_sync(spark) -> None:
+def _bus_sync(spark) -> bool:
     """Flush the listener bus so the event log holds everything the
-    finished run produced (runs OUTSIDE the timed window)."""
+    finished run produced (runs OUTSIDE the timed window). False when
+    the drain failed: the rows measured after it may miss events."""
     try:
         spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    except Exception:
-        pass
+        return True
+    except Exception:  # noqa: BLE001 - any py4j failure means "not synced"
+        return False
 
 
 # a min-of-2 above this triggers one deferred third run (sustained
@@ -401,6 +415,7 @@ def main() -> None:
     times: dict[str, float] = {}
     metrics: dict[str, dict] = {}
     retried: list[str] = []
+    bus_sync_ok = True
 
     def _load1() -> float:
         try:
@@ -420,14 +435,14 @@ def main() -> None:
             release_caches()
             spark.catalog.clearCache()
             if reader:
-                _bus_sync(spark)
+                bus_sync_ok &= _bus_sync(spark)
                 reader.drain()  # discard warmup/teardown events
             load = _load1()
             t0 = time.time()
             run_to_completion(QUERIES[name](spark, sf_dir))
             runs.append(time.time() - t0)
             if reader:
-                _bus_sync(spark)
+                bus_sync_ok &= _bus_sync(spark)
                 m = reader.drain()
                 if runs[-1] == min(runs):
                     # keep the min-wall run's metrics (structural
@@ -463,14 +478,14 @@ def main() -> None:
         release_caches()
         spark.catalog.clearCache()
         if reader:
-            _bus_sync(spark)
+            bus_sync_ok &= _bus_sync(spark)
             reader.drain()
         load = _load1()
         t0 = time.time()
         run_to_completion(QUERIES[name](spark, sf_dir))
         dt = time.time() - t0
         if reader:
-            _bus_sync(spark)
+            bus_sync_ok &= _bus_sync(spark)
             m = reader.drain()
             if dt < times[name]:
                 m["load"] = load
@@ -520,6 +535,9 @@ def main() -> None:
     }
     if metrics:
         payload["queries_metrics"] = metrics
+        # False: some listener-bus drain failed, so a row's metrics may
+        # hold another run's events or miss its own
+        payload["bus_sync_ok"] = bus_sync_ok
     # The driver records only the LAST 2000 chars of stdout and tries
     # to json-parse them: the full 143-query payload is ~5 KB, so since
     # round 3 the recorded BENCH_r{N}.json had "parsed": null — the

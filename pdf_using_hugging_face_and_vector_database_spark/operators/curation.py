@@ -111,8 +111,9 @@ def mixture_sample(
     Scale shape: the filter and explode are shuffle-free projections;
     the cap is one window keyed by source. With domain-cardinality
     sources the window parallelizes across keys; a skewed giant source
-    would use the partial-top-k reduction (operators/search.py) before
-    the window — same contract, same output.
+    would cut each partition to its cap before the window (the running
+    per-partition top-k of operators/search.knn_partials) — same
+    contract, same output.
     """
     from ..functions.hashing import md5_int
 

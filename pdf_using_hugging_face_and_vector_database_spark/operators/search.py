@@ -7,10 +7,13 @@ Physical shapes (what .explain should show):
 
 - Q1 single-query top-k: scan -> project(score) -> TakeOrderedAndProject.
   No shuffle of the corpus; the query vector is a folded literal.
-- Q2 batch kNN: corpus JOIN broadcast(queries) -> score -> window
-  row_number per query <= k. The corpus never shuffles; only the small
-  query side broadcasts. (A cross join that broadcasts the *corpus*
-  would be wrong at 100 TB.)
+- Q2 batch kNN: scan -> MapInArrow (exact per-partition kernel) ->
+  window row_number per query <= k. The small query batch is collected
+  once and rides in the task closure; each corpus Arrow batch is scored
+  against all queries by a NumPy left fold that is bit-identical to the
+  SQL cosine (same fold order, same IEEE ops, no FMA in either engine),
+  and only a running k best per query and partition reaches the
+  window's shuffle. No join, and the corpus never shuffles.
 - Q4 filtered search: plain .filter() BEFORE scoring — Catalyst pushes
   it into the parquet scan (PushedFilters) and prunes partitions when
   the table is partitioned by the metadata column.
@@ -18,17 +21,30 @@ Physical shapes (what .explain should show):
 
 from __future__ import annotations
 
+import math
 from typing import Sequence
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..functions.vector import cosine
 
 
 def query_vector_lit(vec: Sequence[float]) -> Column:
-    """A query vector as a literal array<double> (constant-folded)."""
-    return F.array(*[F.lit(float(x)) for x in vec])
+    """A query vector as a literal array<double> (constant-folded),
+    parsed from one SQL expression: one py4j call however wide the
+    vector, where one ``F.lit`` per element cost ~80 ms at 384-d.
+    ``repr`` is the shortest decimal that parses back to the same
+    double; NaN and +-inf have no literal syntax, so they go through a
+    string cast ('nan', 'inf', '-inf')."""
+    terms = (
+        repr(x) + "D" if math.isfinite(x) else f"CAST('{x}' AS DOUBLE)" for x in map(float, vec)
+    )
+    return F.expr(f"array({', '.join(terms)})")
 
 
 def topk_cosine(
@@ -58,45 +74,106 @@ def _tiebreak(df: DataFrame) -> list[Column]:
     return []
 
 
-def partial_topk_per_partition(
-    scored: DataFrame,
-    k: int,
-    query_id: str = "query_id",
-    corpus_id: str = "vec_id",
-    score_col: str = "score",
-) -> DataFrame:
-    """Per-partition partial top-k BEFORE the exchange: keep only the k
-    best rows per query within each corpus partition, so the top-k
-    window's shuffle carries O(k * partitions * |queries|) rows instead
-    of |corpus| * |queries| — the reduction that makes batch kNN
-    survive a 100 TB corpus.
+def _dense_rows(vecs: pa.Array):
+    """(row indices, float64 matrix) per vector width of an Arrow
+    ``list<float|double>`` array, leaving out null vectors and vectors
+    with a null element: their cosine is NULL, as ``zip_with``'s null
+    product makes it. Reads the Arrow buffers, not pandas, which would
+    turn a null element into NaN (whose cosine is NaN, not NULL)."""
+    off = vecs.offsets.to_numpy()
+    width = np.diff(off)
+    ok = vecs.is_valid().to_numpy(zero_copy_only=False)
+    if vecs.values.null_count:
+        nulls = np.cumsum(np.r_[0, vecs.values.is_null().to_numpy(zero_copy_only=False)])
+        ok &= nulls[off[1:]] == nulls[off[:-1]]
+    vals = vecs.values.to_numpy(zero_copy_only=False).astype("float64", copy=False)
+    for w in np.unique(width[ok]):
+        rows = np.flatnonzero(ok & (width == w))
+        if len(rows) == len(vecs):  # one contiguous block: no gather
+            yield rows, vals[off[0] : off[-1]].reshape(len(rows), w)
+        else:
+            yield rows, vals[off[rows, None] + np.arange(w)]
 
-    Pure SELECTION, no arithmetic: scores are computed JVM-side
-    upstream and pass through Arrow unchanged, so the final result is
-    bit-identical to the unreduced window. The local order (score desc,
-    id asc) is the same strict total order as the final window's, so
-    every global top-k row survives its partition's cut. Bounded
-    memory: the running keep-set is compacted to <= k rows per query
-    after every Arrow batch.
-    """
-    import pandas as pd
 
-    out_schema = scored.schema
+def cosine_fold(M: np.ndarray, Q: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Exact cosine of every query row of ``Q`` against every row of
+    ``M`` (both float64, same width): a (|Q| x |M|) score matrix and
+    the mask of its NULL cells (zero denominator, the ``try_divide``
+    contract of :func:`functions.vector.cosine`).
 
-    def reduce_partition(batches):
-        keep: pd.DataFrame | None = None
-        for pdf in batches:
-            cur = pd.concat([keep, pdf]) if keep is not None else pdf
-            cur = cur.sort_values(
-                [query_id, score_col, corpus_id],
-                ascending=[True, False, True],
-                kind="mergesort",
-            )
-            keep = cur.groupby(query_id, sort=False).head(k)
-        if keep is not None and len(keep):
-            yield keep
+    Bit-identical to that expression: every dot product is the same
+    sequential left fold ``0.0 + x0*y0 + x1*y1 + ...``, here evaluated
+    one dimension at a time across all rows with elementwise NumPy ops.
+    Both engines do the same IEEE double multiplies, adds and square
+    roots in the same order, and neither fuses a multiply-add."""
+    MT = np.ascontiguousarray(M.T)
+    ab = np.zeros((len(Q), len(M)))
+    aa = np.zeros(len(M))
+    qq = np.zeros(len(Q))
+    for j in range(len(MT)):
+        ab += Q[:, j, None] * MT[j]
+        aa += MT[j] * MT[j]
+        qq += Q[:, j] * Q[:, j]
+    den = np.sqrt(aa) * np.sqrt(qq)[:, None]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return ab / den, den == 0
 
-    return scored.mapInPandas(reduce_partition, out_schema)
+
+def _first_k(t: pa.Table, k: int) -> pa.Table:
+    """The first k rows per query ``q`` of (q, key, cls, id, score)
+    rows, in the window's order (see :func:`knn_partials`); null ids
+    first, as Spark's ascending order puts them."""
+    t = t.sort_by(
+        [("q", "ascending"), ("key", "ascending"), ("cls", "ascending"), ("id", "ascending")],
+        null_placement="at_start",
+    )
+    q = t["q"].to_numpy()
+    return t.filter(np.arange(len(q)) - np.searchsorted(q, q) < k)
+
+
+def knn_partials(qids: pa.Array, qvecs: pa.Array, k: int):
+    """Per-partition half of :func:`knn_join`, for ``mapInArrow`` over
+    (corpus id, corpus vector): score each Arrow batch against every
+    query (ids ``qids``, vectors ``qvecs``) with :func:`cosine_fold`,
+    keep a running k best per query, and emit (query id, corpus id,
+    score) for the survivors. Memory is one batch plus k rows per query.
+
+    The order is the window's (score DESC, id ASC) as Spark sorts it:
+    NaN first, NULL last. ``key`` maps it onto one ascending double
+    (NaN -inf, NULL +inf) and ``cls`` (NaN 0, number 1, NULL 2) breaks
+    the ties that mapping could make. A batch's rows whose key is past
+    a query's k-th smallest cannot make the cut and are dropped before
+    the exact sort."""
+    queries = {M.shape[1]: (rows, M) for rows, M in _dense_rows(qvecs)}
+    nq = len(qids)
+
+    def partials(batches):
+        keep = None
+        for b in batches:
+            n = b.num_rows
+            if not (n and nq and k > 0):
+                continue
+            score = np.full((nq, n), np.nan)
+            null = np.ones((nq, n), dtype=bool)
+            for rows, M in _dense_rows(b.column(1)):
+                if M.shape[1] in queries:
+                    qrows, Q = queries[M.shape[1]]
+                    cell = np.ix_(qrows, rows)
+                    score[cell], null[cell] = cosine_fold(M, Q)
+            cls = np.where(null, 2, np.where(np.isnan(score), 0, 1))
+            key = np.where(cls == 1, -score, np.where(null, np.inf, -np.inf))
+            kth = np.partition(key, min(k, n) - 1, axis=1)[:, min(k, n) - 1, None]
+            qi, ri = np.nonzero(key <= kth)
+            t = pa.table({
+                "q": qi, "key": key[qi, ri], "cls": cls[qi, ri], "id": b.column(0).take(ri),
+                "score": pa.array(score[qi, ri], mask=null[qi, ri]),
+            })
+            keep = _first_k(t if keep is None else pa.concat_tables([keep, t]), k)
+        if keep is not None and keep.num_rows:
+            out = [qids.take(keep["q"].to_numpy()), keep["id"], keep["score"]]
+            yield from pa.table(out, names=["query_id", "corpus_id", "score"]).to_batches()
+
+    return partials
 
 
 def knn_join(
@@ -111,20 +188,26 @@ def knn_join(
 ) -> DataFrame:
     """Q2 — exact batch kNN: top-k corpus rows per query row.
 
-    The query side is broadcast (it is the small side by construction:
-    a batch of search requests vs a 100 TB corpus); scoring streams
-    over corpus partitions. Before the per-query top-k window, a
-    per-partition partial top-k (:func:`partial_topk_per_partition`)
-    truncates each partition to k rows per query, so the only shuffle
-    carries O(k * partitions * |queries|) narrow rows — never the
-    |corpus| x |queries| scored stream.
+    The query batch is the small side by contract (a batch of search
+    requests vs a 100 TB corpus): it is collected once, when this is
+    called (one job at most), and travels in the task closure. One shuffle-free ``mapInArrow`` over
+    the corpus (:func:`knn_partials`) scores each Arrow batch against
+    all queries with the exact NumPy kernel :func:`cosine_fold` and
+    keeps a running k best per query, so the window's shuffle carries
+    at most k * partitions * |queries| narrow rows. The scores are
+    bit-identical to :func:`functions.vector.cosine` (same left-fold
+    order, same IEEE ops, no FMA in either engine), so the survivors
+    are exactly the rows the per-query ``row_number`` window would keep
+    from the full cross product.
     """
-    joined = corpus.crossJoin(F.broadcast(queries))
-    scored = joined.withColumn(
-        score_col, cosine(F.col(corpus_vec), F.col(query_vec))
-    ).select(query_id, corpus_id, score_col)
-    reduced = partial_topk_per_partition(
-        scored, k, query_id=query_id, corpus_id=corpus_id, score_col=score_col
+    score = StructField(score_col, DoubleType())
+    schema = StructType([queries.schema[query_id], corpus.schema[corpus_id], score])
+    # collect(), not toArrow(): a local query batch collects without a job
+    rows = queries.select(query_id, query_vec).collect()
+    qids = pa.array([r[0] for r in rows], to_arrow_type(schema[0].dataType))
+    qvecs = pa.array([r[1] for r in rows], pa.list_(pa.float64()))
+    reduced = corpus.select(corpus_id, corpus_vec).mapInArrow(
+        knn_partials(qids, qvecs, k), schema
     )
     w = Window.partitionBy(query_id).orderBy(F.desc(score_col), F.col(corpus_id))
     return (

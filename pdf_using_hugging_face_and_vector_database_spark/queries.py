@@ -32,7 +32,7 @@ from .operators.dedup import (
 )
 from .operators.embedder import embed_deterministic
 from .operators.ids import with_metadata, with_vector_id
-from .operators.search import knn_join, topk_cosine
+from .operators.search import knn_join, query_vector_lit, topk_cosine
 from .operators.text_analysis import corpus_rollup, doc_stats, fingerprint, language_id
 
 # ---- shared constants (oracle.py imports these — single source) ----
@@ -274,7 +274,7 @@ def q1_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q2_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q2 — exact batch kNN: top-3 corpus neighbors per query row
-    (broadcast query side + per-query window top-k)."""
+    (exact per-partition NumPy kernel + per-query window top-k)."""
     emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < KNN_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_embedding")
@@ -3378,7 +3378,7 @@ def q3_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.round("score", 6).alias("score")
     )
     scored = emb.select(
-        "vec_id", F.round(cosine(F.col("embedding"), F.array([F.lit(float(x)) for x in qv])), 6).alias("s")
+        "vec_id", F.round(cosine(F.col("embedding"), query_vector_lit(qv)), 6).alias("s")
     )
 
     def _probe_leg():
@@ -3569,7 +3569,7 @@ def q3_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = emb.select(
         "vec_id",
-        cosine(F.col("embedding"), F.array([F.lit(float(x)) for x in qv])).alias("s"),
+        cosine(F.col("embedding"), query_vector_lit(qv)).alias("s"),
     )
 
     def _probe_leg():

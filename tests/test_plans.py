@@ -37,25 +37,25 @@ def test_topk_is_take_ordered_not_global_sort(spark, sf_dir):
     assert has_take_ordered(Q.q4_filtered_topk(spark, sf_dir))
 
 
-def test_knn_join_broadcasts_query_side(spark, sf_dir):
-    """Q2: the (small) query side broadcasts; the corpus must never
-    shuffle for the join itself; and the per-partition partial top-k
-    (MapInPandas) must sit UPSTREAM of the window's Exchange so the
+def test_knn_join_scores_corpus_without_join_or_shuffle(spark, sf_dir):
+    """Q2: the corpus scan feeds the scoring kernel directly: no
+    Exchange or SortMergeJoin under it, and no join of any kind reads
+    it (the query batch travels in the task closure, which PySpark
+    itself broadcasts above 1 MB). The per-partition top-k
+    (MapInArrow) must sit UPSTREAM of the window's Exchange, so the
     shuffle carries the reduced stream, not |corpus| x |queries|."""
     df = Q.q2_knn_join(spark, sf_dir)
     plan = formatted_plan(df)
-    assert "Broadcast" in plan
-    # corpus-side scan feeds the join without an Exchange before it
-    assert "SortMergeJoin" not in plan
-    assert "MapInPandas" in plan
-    # formatted explain numbers operators leaf-to-root: the partial
-    # top-k must execute before (higher op id than... ids ascend from
-    # the root) — assert via the tree section: Exchange appears above
-    # MapInPandas in the indented operator tree
-    tree = plan.split("\n\n")[0]
-    exch = [i for i, l in enumerate(tree.splitlines()) if "Exchange" in l]
-    mip = [i for i, l in enumerate(tree.splitlines()) if "MapInPandas" in l]
-    assert exch and mip and min(exch) < min(mip), (exch, mip)
+    assert "Join" not in plan  # no BroadcastNestedLoopJoin, no SortMergeJoin
+    # formatted explain's tree section is indented root-first: the
+    # kernel and the scan below it come after (below) the Exchange,
+    # and the scan is the kernel's direct child
+    tree = plan.split("\n\n")[0].splitlines()
+    exch = [i for i, l in enumerate(tree) if "Exchange" in l]
+    mia = [i for i, l in enumerate(tree) if "MapInArrow" in l]
+    scan = [i for i, l in enumerate(tree) if "Scan parquet" in l]
+    assert len(exch) == 1 and len(mia) == 1 and len(scan) == 1, tree
+    assert exch[0] < mia[0] and scan[0] == mia[0] + 1, tree
 
 
 def test_revenue_join_broadcasts_dim(spark, sf_dir):

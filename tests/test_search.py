@@ -14,6 +14,7 @@ from pdf_using_hugging_face_and_vector_database_spark.operators.search import (
     fetch_by_ids,
     delete_by_ids,
     knn_join,
+    query_vector_lit,
     topk_cosine,
 )
 
@@ -54,13 +55,14 @@ def test_knn_join_matches_numpy(spark, sf_dir, emb_np):
         assert mine == expect, f"query {qid}"
 
 
-def test_knn_partial_topk_reduces_exchange_input(spark, sf_dir, emb_np):
-    """The pre-exchange partial top-k must (a) cap the shuffled row
-    count at k * partitions * |queries| and (b) select exactly the rows
-    the final window would rank <= k — same strict total order."""
-    from pdf_using_hugging_face_and_vector_database_spark.functions.vector import cosine
+def test_knn_partials_reduce_exchange_input(spark, sf_dir, emb_np):
+    """The per-partition kernel must (a) cap the rows entering the
+    window's shuffle at k * partitions * |queries| and (b) keep every
+    row the final window ranks <= k."""
+    import pyarrow as pa
+
     from pdf_using_hugging_face_and_vector_database_spark.operators.search import (
-        partial_topk_per_partition,
+        knn_partials,
     )
 
     ids, mat = emb_np
@@ -69,18 +71,17 @@ def test_knn_partial_topk_reduces_exchange_input(spark, sf_dir, emb_np):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_embedding")
     )
     k = 5
-    scored = (
-        emb.crossJoin(F.broadcast(queries))
-        .withColumn("score", cosine(F.col("embedding"), F.col("query_embedding")))
-        .select("query_id", "vec_id", "score")
+    qids = pa.array(range(4), pa.int64())
+    qvecs = pa.array([list(mat[q]) for q in range(4)], pa.list_(pa.float64()))
+    n_reduced = (
+        emb.select("vec_id", "embedding")
+        .mapInArrow(knn_partials(qids, qvecs, k), "query_id long, vec_id long, score double")
+        .count()
     )
-    reduced = partial_topk_per_partition(scored, k)
-    n_reduced = reduced.count()
     n_parts = emb.rdd.getNumPartitions()
     assert n_reduced <= k * n_parts * 4, (n_reduced, n_parts)
-    assert n_reduced < scored.count()  # strictly fewer rows shuffle
-    # every exact top-k row survives the partition cut
-    got = knn_join(queries, emb.repartition(8), k=k).collect()
+    assert n_reduced < len(ids) * 4  # strictly fewer rows shuffle
+    got = knn_join(queries, emb, k=k).collect()
     for qid in range(4):
         expect = brute_topk(ids, mat, mat[qid], k)
         mine = [
@@ -89,6 +90,115 @@ def test_knn_partial_topk_reduces_exchange_input(spark, sf_dir, emb_np):
             if r["query_id"] == qid
         ]
         assert mine == expect, f"query {qid}"
+
+
+def _knn_reference(queries, corpus, k):
+    """The cross-join pipeline knn_join replaced: score every (corpus,
+    query) pair with the SQL cosine, rank with the same window."""
+    from pyspark.sql import Window
+
+    from pdf_using_hugging_face_and_vector_database_spark.functions.vector import cosine
+
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.col("vec_id"))
+    return (
+        corpus.crossJoin(F.broadcast(queries))
+        .withColumn("score", cosine(F.col("embedding"), F.col("query_embedding")))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "vec_id", "score", "rank")
+    )
+
+
+def _exact_rows(df):
+    """Rows with each score as its exact bits (float.hex), NaN as one
+    token (Spark orders all NaNs equal), NULL as None."""
+    return sorted(
+        (r[0], r[3], r[1], None if r[2] is None else "nan" if r[2] != r[2] else r[2].hex())
+        for r in df.collect()
+    )
+
+
+def test_knn_join_matches_cross_join_bit_for_bit(spark):
+    """The exact NumPy kernel returns the rows, ranks and unrounded
+    scores of the SQL cosine + window pipeline, over the cases where
+    the two could part: exact ties (broken by id), duplicate vectors,
+    scores 1 ulp apart, a null id, zero/null vectors, null elements, a
+    width mismatch, NaN/inf/subnormal components, array<float> input,
+    empty partitions, k past a partition's size and an empty query
+    batch."""
+    from pdf_using_hugging_face_and_vector_database_spark.operators.search import (
+        cosine_fold,
+    )
+
+    q0 = np.array([0.3, -0.7, 0.2, 0.6])
+    # two nudges of one vector whose cosines with q0 are 1 ulp apart
+    base = np.array([0.5, 0.1, -0.4, 0.75])
+    nudged = [base.copy()]
+    for _ in range(64):
+        nxt = nudged[-1].copy()
+        nxt[3] = np.nextafter(nxt[3], 1.0)
+        nudged.append(nxt)
+    sc = cosine_fold(np.array(nudged), q0[None, :])[0][0]
+    i = next(i for i in range(64) if np.nextafter(sc[i], 2.0) == sc[i + 1] or np.nextafter(sc[i], -2.0) == sc[i + 1])
+    vecs = [
+        nudged[i].tolist(), nudged[i + 1].tolist(),
+        [0.3, -0.7, 0.2, 0.6], [0.3, -0.7, 0.2, 0.6],  # duplicates of q0
+        [0.6, -1.4, 0.4, 1.2],  # same direction: a tie in exact arithmetic
+        [0.0, 0.0, 0.0, 0.0], None, [0.1, None, 0.2, 0.3], [0.3, -0.7, 0.2],
+        [float("nan"), 0.1, 0.2, 0.3], [float("inf"), 0.0, 0.0, 1.0],
+        [5e-324, -2.5e-310, 1e-05, -0.0], [-0.3, 0.7, -0.2, -0.6],
+        [1e-300, 1e-300, 1e-300, 1e-300], [1e300, 1e300, -1e300, 1e300],
+    ]
+    corpus = spark.createDataFrame(
+        [(100 - j, v) for j, v in enumerate(vecs)] + [(None, [0.3, -0.7, 0.2, 0.6])],
+        "vec_id long, embedding array<double>",
+    )
+    queries = spark.createDataFrame(
+        [
+            (0, q0.tolist()), (1, [0.0, 0.0, 0.0, 0.0]), (2, [0.3, -0.7, 0.2]),
+            (3, [0.5, float("nan"), 0.1, 0.0]), (4, [1.0, None, 0.0, 0.0]),
+            (5, None), (6, [1e-05, 5e-324, -0.0, 2.0]), (7, q0.tolist()),
+        ],
+        "query_id long, query_embedding array<double>",
+    )
+    full = _exact_rows(_knn_reference(queries, corpus, 40))
+    top3 = [r for r in full if r[1] <= 3]
+    as_float = corpus.select(
+        "vec_id", F.transform("embedding", lambda x: x.cast("float")).alias("embedding")
+    )
+    subset = corpus.filter(F.col("vec_id") > 95)
+    cases = [
+        (corpus.coalesce(1), 3, top3),
+        (corpus.coalesce(1), 40, full),
+        (corpus.repartition(8), 3, top3),
+        (as_float.repartition(3), 40, _exact_rows(_knn_reference(queries, as_float, 40))),
+        # 5 rows over 8 hash partitions: some partitions are empty
+        (subset.repartition(8, "vec_id"), 3, _exact_rows(_knn_reference(queries, subset, 3))),
+    ]
+    # 4-row Arrow batches: the running top-k merges across batches
+    batch_conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old_batch = spark.conf.get(batch_conf)
+    spark.conf.set(batch_conf, "4")
+    try:
+        for corp, k, want in cases:
+            assert _exact_rows(knn_join(queries, corp, k=k)) == want, k
+    finally:
+        spark.conf.set(batch_conf, old_batch)
+    assert knn_join(queries.limit(0), corpus, k=3).count() == 0
+
+
+def test_query_vector_lit_equals_per_element_literal(spark):
+    """The one-expression literal holds the same doubles, bit for bit,
+    as the old one-``F.lit``-per-element array."""
+    import struct
+
+    v = [-0.0, 5e-324, -2.5e-310, 1e-05, float("nan"), float("inf"), -float("inf"), 0.1, 1.7976931348623157e308]
+    row = spark.range(1).select(
+        query_vector_lit(v).alias("folded"),
+        F.array(*[F.lit(float(x)) for x in v]).alias("per_element"),
+    ).collect()[0]
+    bits = lambda xs: [struct.pack(">d", x) for x in xs]  # noqa: E731
+    assert bits(row["folded"]) == bits(row["per_element"])
 
 
 def _planted_clusters(n=500, n_clusters=10, dim=64):
