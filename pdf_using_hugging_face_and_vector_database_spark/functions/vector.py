@@ -6,9 +6,20 @@ The reference's similarity space is 384-d cosine
 product; all arithmetic is done in DOUBLE with a sequential
 left-to-right fold so results are bit-identical to the DuckDB oracle's
 ``list_dot_product(a::DOUBLE[], b::DOUBLE[])``.
+
+Two cosines: :func:`cosine` for two array columns (three folds per
+row), and :func:`cosine_to` for a column against one constant query
+vector. The latter folds the query's norm once on the driver and folds
+each row twice (dot with the query literal, own squared norm), with
+the literal referenced once; its scores are bit-identical to
+``cosine(a, query_vector_lit(q))`` (same folds, same IEEE ops, same
+factor order — pinned in tests/test_vector.py).
 """
 
 from __future__ import annotations
+
+import math
+from typing import Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -43,6 +54,50 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     Pin: tests/test_vector.py::test_cosine_zero_vector_is_null_not_error.
     """
     return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
+
+
+def _double_lit(x: float) -> str:
+    """SQL literal for one double: ``repr`` is the shortest decimal
+    that parses back to the same double; NaN and +-inf have no literal
+    syntax, so they go through a string cast ('nan', 'inf', '-inf')."""
+    return repr(x) + "D" if math.isfinite(x) else f"CAST('{x}' AS DOUBLE)"
+
+
+def _array_lit(vec: Sequence[float]) -> str:
+    return f"array({', '.join(_double_lit(float(x)) for x in vec)})"
+
+
+def query_vector_lit(vec: Sequence[float]) -> Column:
+    """A query vector as a literal array<double> (constant-folded),
+    parsed from one SQL expression: one py4j call however wide the
+    vector, where one ``F.lit`` per element cost ~80 ms at 384-d."""
+    return F.expr(_array_lit(vec))
+
+
+def cosine_to(a: str, q: Sequence[float]) -> Column:
+    """cos(a, q) of the array column named ``a`` against one constant
+    query vector ``q``: bit-identical to
+    ``cosine(a, query_vector_lit(q))`` at one fold fewer per row.
+
+    ‖q‖ is folded once here, on the driver: the same sequential left
+    fold ``0.0 + q0*q0 + q1*q1 + ...`` in IEEE doubles, then
+    ``math.sqrt`` (correctly rounded, like the JVM's). Per row, the dot
+    with the literal (referenced once, so the plan analyses one copy)
+    and the row's squared norm, folded straight over ``a`` instead of
+    over ``zip_with(a, a)``: the same products added in the same order.
+    The denominator keeps :func:`cosine`'s factor order,
+    ``sqrt(a·a) * ‖q‖``, and its ``try_divide`` (NULL on a zero
+    vector or a zero query). The whole expression is parsed from one
+    SQL string: built from Column calls it cost ~25 ms of py4j round
+    trips per query, as much as the rest of the query's planning."""
+    q = [float(x) for x in q]
+    qq = 0.0
+    for x in q:
+        qq += x * x
+    col = "`" + a.replace("`", "``") + "`"
+    ab = f"aggregate(zip_with({col}, {_array_lit(q)}, (x, y) -> double(x) * double(y)), 0D, (s, p) -> s + p)"
+    aa = f"aggregate({col}, 0D, (s, x) -> s + double(x) * double(x))"
+    return F.expr(f"try_divide({ab}, sqrt({aa}) * {_double_lit(math.sqrt(qq))})")
 
 
 def l2_normalize(a: Column | str) -> Column:

@@ -29,9 +29,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions.hashing import MAX24, det_embed_py
-from ..functions.vector import cosine
+from ..functions.vector import cosine, cosine_to
 
 # persisted-index root (generated data, gitignored): the build/probe
 # split writes the assigned table here partitioned by cell, so a probe
@@ -227,13 +228,9 @@ def topk_in_cells(
 ) -> DataFrame:
     """Probe the nprobe nearest cells of an assigned corpus and re-rank
     exactly inside them (shared probe kernel)."""
-    from .search import query_vector_lit
-
     cells = nearest_cells(centroids, query_vec, nprobe)
     cand = assigned.filter(F.col("cell").isin(cells))
-    scored = cand.withColumn(
-        "score", cosine(F.col(vec_col), query_vector_lit(query_vec))
-    )
+    scored = cand.withColumn("score", cosine_to(vec_col, query_vec))
     return scored.orderBy(F.desc("score"), F.col(id_col)).limit(k).drop("cell")
 
 
@@ -338,6 +335,10 @@ def build_ivf_index(
     overwrite and re-written (atomically) last, so a rebuild that dies
     mid-way leaves a visibly-absent index (rebuilt on next use), never
     old centroids pointing at new partitions.
+
+    The marker records the ``assigned`` table's schema, so a probe
+    reads with it instead of running a footer-inference job, and an
+    append is checked against it.
     """
     idx = IvfIndex(k=n_cells, iters=iters, dim=dim).fit(df, vec_col)
     os.makedirs(path, exist_ok=True)
@@ -357,6 +358,7 @@ def build_ivf_index(
             "dim": dim,
             "fingerprint": fingerprint,
             "centroids": idx.centroids,
+            "schema": idx.assigned.schema.jsonValue(),
         },
     )
     return idx
@@ -384,13 +386,34 @@ def set_index_fingerprint(path: str, fingerprint: str) -> None:
 
 def ivf_index_exists(path: str, fingerprint: str | None = None) -> bool:
     """True iff a readable index is present AND (when given) its stored
-    source fingerprint matches — stale indexes count as absent."""
+    source fingerprint matches — stale indexes count as absent, and so
+    do indexes whose marker records no table schema (built before the
+    schema was recorded)."""
     from ..store import read_marker
 
     meta = read_marker(os.path.join(path, "centroids.json"))
-    if not meta:
+    if not meta or "schema" not in meta:
         return False
     return fingerprint is None or meta.get("fingerprint") == fingerprint
+
+
+def _index_meta(path: str) -> dict:
+    """The index marker under ``path``, which must record the
+    ``assigned`` table's schema. Markers written before the schema was
+    recorded are refused, not read by inference: such an index is
+    rebuilt (its fingerprint's code token no longer matches either)."""
+    from ..store import read_marker
+
+    marker = os.path.join(path, "centroids.json")
+    meta = read_marker(marker)
+    if not meta:
+        raise FileNotFoundError(f"no readable index marker at {marker}")
+    if "schema" not in meta:
+        raise ValueError(
+            f"the IVF index at {path} records no table schema (built by an "
+            f"older version): rebuild it with build_ivf_index"
+        )
+    return meta
 
 
 def probe_ivf_index(
@@ -406,12 +429,14 @@ def probe_ivf_index(
     the stored centroids (n_cells tiny), then a partition-pruned scan
     of only those cells, exact re-rank inside (shared kernel
     :func:`topk_in_cells` — cannot drift from the in-memory index).
-    No index rebuild — the read path is what repeated queries pay."""
-    from ..store import read_marker
+    No index rebuild — the read path is what repeated queries pay.
 
-    meta = read_marker(os.path.join(path, "centroids.json"))
-    if not meta:
-        raise FileNotFoundError(f"no readable index marker under {path}")
+    One Spark job: the table is read with the schema the build recorded
+    (no footer-inference job); the file listing is fresh on every call,
+    so rows appended since are seen, and the ``cell`` filter still
+    prunes whole partitions (PartitionFilters). Each row is scored with
+    :func:`functions.vector.cosine_to`."""
+    meta = _index_meta(path)
     # a dim mismatch was previously SILENT: cosine's zip_with truncates
     # to the shorter array, scoring on a prefix (r10 review)
     if "dim" in meta and len(query_vec) != meta["dim"]:
@@ -419,7 +444,9 @@ def probe_ivf_index(
             f"probe_ivf_index: query dim {len(query_vec)} != stored "
             f"index dim {meta['dim']} at {path}"
         )
-    assigned = spark.read.parquet(os.path.join(path, "assigned"))
+    assigned = spark.read.schema(StructType.fromJson(meta["schema"])).parquet(
+        os.path.join(path, "assigned")
+    )
     return topk_in_cells(
         assigned, meta["centroids"], query_vec, k, nprobe, vec_col, id_col
     )
@@ -450,15 +477,28 @@ def append_ivf_index(
     real one last via set_index_fingerprint (see q3_ann_append), so
     any crash forces that rebuild automatically. Returns the number
     of appended rows.
-    """
-    from ..store import read_marker, write_marker_atomic
 
-    marker = os.path.join(path, "centroids.json")
-    meta = read_marker(marker)
-    if not meta:
-        raise FileNotFoundError(f"no readable index marker at {marker}")
+    The batch must carry every column of the recorded schema with the
+    same type (nullability aside), or this raises ``ValueError`` naming
+    the column; only those columns are written, so the table keeps the
+    schema probes read it with.
+    """
+    from ..store import write_marker_atomic
+
+    meta = _index_meta(path)
     if tag in meta.get("appends", {}):
         return 0
+    cols = [f for f in StructType.fromJson(meta["schema"]).fields if f.name != "cell"]
+    have = {f.name: f.dataType for f in new_vectors.schema.fields}
+    for f in cols:
+        if f.name not in have:
+            raise ValueError(f"append_ivf_index: batch lacks index column {f.name!r}")
+        if have[f.name].simpleString() != f.dataType.simpleString():
+            raise ValueError(
+                f"append_ivf_index: column {f.name!r} is {have[f.name].simpleString()} "
+                f"in the batch but {f.dataType.simpleString()} in the index at {path}"
+            )
+    new_vectors = new_vectors.select(*[f.name for f in cols])
     from pyspark.sql import Observation
 
     # the row count rides the append WRITE as an Observation: one job,
@@ -474,7 +514,7 @@ def append_ivf_index(
     )
     n = obs.get["n"]
     meta.setdefault("appends", {})[tag] = n
-    write_marker_atomic(marker, meta)
+    write_marker_atomic(os.path.join(path, "centroids.json"), meta)
     return n
 
 

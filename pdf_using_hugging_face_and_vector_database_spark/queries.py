@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from .functions.hashing import det_embed_py
 from .functions.text import LANG_MARKERS
-from .functions.vector import cosine
+from .functions.vector import cosine, cosine_to
 from .io import read_table
 from .operators.chunker import chunk_stride
 from .operators.dedup import (
@@ -32,7 +32,7 @@ from .operators.dedup import (
 )
 from .operators.embedder import embed_deterministic
 from .operators.ids import with_metadata, with_vector_id
-from .operators.search import knn_join, query_vector_lit, topk_cosine
+from .operators.search import knn_join, topk_cosine
 from .operators.text_analysis import corpus_rollup, doc_stats, fingerprint, language_id
 
 # ---- shared constants (oracle.py imports these — single source) ----
@@ -3005,7 +3005,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     only. The oracle replays both legs and the fusion in DuckDB."""
     from .functions.hashing import det_components_py, hash_components
     from .functions.text import tokens
-    from .operators.search import query_vector_lit, ranked_topk, rrf_fuse
+    from .operators.search import ranked_topk, rrf_fuse
 
     docs = read_table(spark, sf_dir, "documents")
     qterms = sorted(set(QUERY_TEXT.split()))
@@ -3035,7 +3035,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     vec = emb.select(
         "doc_id",
-        F.round(cosine(F.col("v"), query_vector_lit(qv)), 6).alias("vec_score"),
+        F.round(cosine_to("v", qv), 6).alias("vec_score"),
     )
     vec_leg = ranked_topk(vec, "vec_score", "doc_id", HYBRID_LEG_K)
 
@@ -3378,7 +3378,7 @@ def q3_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.round("score", 6).alias("score")
     )
     scored = emb.select(
-        "vec_id", F.round(cosine(F.col("embedding"), query_vector_lit(qv)), 6).alias("s")
+        "vec_id", F.round(cosine_to("embedding", qv), 6).alias("s")
     )
 
     def _probe_leg():
@@ -3569,7 +3569,7 @@ def q3_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = emb.select(
         "vec_id",
-        cosine(F.col("embedding"), query_vector_lit(qv)).alias("s"),
+        cosine_to("embedding", qv).alias("s"),
     )
 
     def _probe_leg():

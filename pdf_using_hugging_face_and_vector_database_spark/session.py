@@ -100,11 +100,30 @@ def scratch_local_dir(sf_dir: str | None = None) -> str | None:
 
 # Stale-scratch reaping (r15 ADVICE): a crashed run's shuffle dirs
 # under the tmpfs root hold RAM indefinitely (nothing else ever
-# touches them). Entries older than this are dead — a live session's
-# DiskBlockManager dirs are created at ITS launch, minutes-to-an-hour
-# ago at most in this harness — and are removed at the next JVM
-# launch, before the new session starts writing.
+# touches them). An entry in which nothing has been written for this
+# long is dead and is removed at the next JVM launch, before the new
+# session starts writing. Age is the NEWEST mtime in the entry's
+# subtree: a live JVM's blockmgr-* dir is created at its launch and
+# keeps an old top-level mtime while shuffle files are written deep
+# inside it.
 _SCRATCH_STALE_SEC = 3600.0
+
+
+def _touched_since(p: str, cutoff: float) -> bool:
+    """True if ``p``, or anything under it when it is a directory, has
+    an mtime at or after ``cutoff`` (symlinks are not followed)."""
+    if os.lstat(p).st_mtime >= cutoff:
+        return True
+    if os.path.islink(p) or not os.path.isdir(p):
+        return False
+    for root, dirs, files in os.walk(p):
+        for name in dirs + files:
+            try:
+                if os.lstat(os.path.join(root, name)).st_mtime >= cutoff:
+                    return True
+            except OSError:
+                continue
+    return False
 
 
 def _reap_stale_scratch(local_dir: str, now: float | None = None) -> None:
@@ -123,7 +142,7 @@ def _reap_stale_scratch(local_dir: str, now: float | None = None) -> None:
     for name in entries:
         p = os.path.join(local_dir, name)
         try:
-            if now - os.lstat(p).st_mtime < _SCRATCH_STALE_SEC:
+            if _touched_since(p, now - _SCRATCH_STALE_SEC):
                 continue
             if os.path.isdir(p) and not os.path.islink(p):
                 shutil.rmtree(p, ignore_errors=True)

@@ -94,24 +94,46 @@ def test_pipeline_is_shuffle_free(spark, sf_dir):
 
 def test_ivf_probe_prunes_partitions(spark, sf_dir, tmp_path):
     """The persisted IVF index is partitioned by cell; a probe must
-    show PartitionFilters on cell (whole-partition pruning), and read
-    strictly fewer rows than the corpus."""
+    show PartitionFilters on cell (whole-partition pruning), read
+    strictly fewer rows than the corpus, and run as ONE Spark job: the
+    table is read with the schema the build recorded, so there is no
+    footer-inference job. The file listing stays fresh per probe: rows
+    appended after the build are found."""
     from pdf_using_hugging_face_and_vector_database_spark.functions.hashing import (
         det_embed_py,
     )
     from pdf_using_hugging_face_and_vector_database_spark.operators.ann import (
+        append_ivf_index,
         build_ivf_index,
         probe_ivf_index,
     )
 
     emb = read_table(spark, sf_dir, "embeddings")
     path = str(tmp_path / "ivf")
-    build_ivf_index(emb, path, n_cells=8, iters=1, dim=64)
+    build_ivf_index(emb.filter(F.col("vec_id") % 50 != 7), path, n_cells=8, iters=1, dim=64)
     q = det_embed_py("probe", 64)
     df = probe_ivf_index(spark, path, q, k=5, nprobe=2)
     plan = formatted_plan(df)
     assert "PartitionFilters" in plan and "cell" in plan.split("PartitionFilters", 1)[1][:200]
     assert df.count() == 5
+
+    sc = spark.sparkContext
+    sc.setJobGroup("ivf_probe_jobs", "ivf_probe_jobs")
+    try:
+        rows = probe_ivf_index(spark, path, q, k=5, nprobe=2).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("ivf_probe_jobs")) == 1
+    assert len(rows) == 5
+
+    held = emb.filter(F.col("vec_id") % 50 == 7)
+    target = held.orderBy("vec_id").first()
+    before = probe_ivf_index(spark, path, list(target["embedding"]), k=5, nprobe=2)
+    assert target["vec_id"] not in {r["vec_id"] for r in before.collect()}
+    assert append_ivf_index(spark, path, held, tag="held") == held.count()
+    after = probe_ivf_index(spark, path, list(target["embedding"]), k=5, nprobe=2)
+    assert target["vec_id"] in {r["vec_id"] for r in after.collect()}
 
 
 def test_fetch_pushes_isin(spark, sf_dir):

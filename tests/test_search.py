@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pdf_using_hugging_face_and_vector_database_spark.functions.hashing import det_embed_py
+from pdf_using_hugging_face_and_vector_database_spark.functions.vector import query_vector_lit
 from pdf_using_hugging_face_and_vector_database_spark.io import read_table
 from pdf_using_hugging_face_and_vector_database_spark.operators.ann import (
     BrpLshIndex,
@@ -14,7 +15,6 @@ from pdf_using_hugging_face_and_vector_database_spark.operators.search import (
     fetch_by_ids,
     delete_by_ids,
     knn_join,
-    query_vector_lit,
     topk_cosine,
 )
 
@@ -710,3 +710,73 @@ def test_brp_lsh_survives_zero_vector(spark):
     # a zero QUERY vector must not poison the probe either
     got0 = idx.query([0.0] * 8, k=2).collect()
     assert len(got0) == 2
+
+
+def test_ivf_index_without_recorded_schema_is_absent(spark, sf_dir, tmp_path):
+    """A marker that records no table schema (an index built before the
+    schema was recorded) counts as absent, and probing it fails with an
+    error that says to rebuild — there is no inference fallback."""
+    import json
+
+    from pdf_using_hugging_face_and_vector_database_spark.operators.ann import (
+        append_ivf_index,
+        build_ivf_index,
+        ivf_index_exists,
+        probe_ivf_index,
+    )
+    from pdf_using_hugging_face_and_vector_database_spark.store import (
+        write_marker_atomic,
+    )
+
+    emb = read_table(spark, sf_dir, "embeddings").limit(50)
+    path = str(tmp_path / "ivf")
+    build_ivf_index(emb, path, n_cells=4, iters=1, dim=64, fingerprint="fp")
+    assert ivf_index_exists(path, "fp")
+    marker = tmp_path / "ivf" / "centroids.json"
+    meta = json.loads(marker.read_text())
+    del meta["schema"]
+    write_marker_atomic(str(marker), meta)
+    assert not ivf_index_exists(path) and not ivf_index_exists(path, "fp")
+    q = det_embed_py("probe", 64)
+    with pytest.raises(ValueError, match="records no table schema.*rebuild"):
+        probe_ivf_index(spark, path, q, k=5, nprobe=2)
+    with pytest.raises(ValueError, match="rebuild"):
+        append_ivf_index(spark, path, emb, tag="t")
+
+
+def test_ivf_append_checks_the_recorded_schema(spark, sf_dir, tmp_path):
+    """An append batch that lacks a recorded column, or carries one
+    with another type, is refused with the column named; an extra
+    column is not written, so probes keep reading the recorded schema."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    from pdf_using_hugging_face_and_vector_database_spark.operators.ann import (
+        append_ivf_index,
+        build_ivf_index,
+        probe_ivf_index,
+    )
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    base = emb.filter(F.col("vec_id") % 10 != 3)
+    new = emb.filter(F.col("vec_id") % 10 == 3)
+    path = str(tmp_path / "ivf")
+    build_ivf_index(base, path, n_cells=4, iters=1, dim=64)
+    with pytest.raises(ValueError, match="lacks index column 'label'"):
+        append_ivf_index(spark, path, new.drop("label"), tag="a")
+    wide = new.withColumn("embedding", F.col("embedding").cast("array<double>"))
+    with pytest.raises(ValueError, match="column 'embedding' is array<double>"):
+        append_ivf_index(spark, path, wide, tag="a")
+    assert append_ivf_index(spark, path, new.withColumn("extra", F.lit(1)), tag="a") == new.count()
+    stored = spark.read.parquet(str(tmp_path / "ivf" / "assigned"))
+    assert "extra" not in stored.columns
+    assert stored.count() == emb.count()
+    recorded = StructType.fromJson(
+        json.loads((tmp_path / "ivf" / "centroids.json").read_text())["schema"]
+    )
+    assert stored.schema == spark.read.schema(recorded).parquet(
+        str(tmp_path / "ivf" / "assigned")
+    ).schema
+    q = det_embed_py("probe", 64)
+    assert probe_ivf_index(spark, path, q, k=5, nprobe=4).count() == 5

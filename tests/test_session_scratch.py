@@ -62,3 +62,24 @@ def test_reap_stale_scratch_removes_only_dead_entries(tmp_path):
 
 def test_reap_missing_dir_is_noop(tmp_path):
     S._reap_stale_scratch(str(tmp_path / "never_created"))
+
+
+def test_reap_judges_age_by_newest_mtime_in_subtree(tmp_path):
+    """A live JVM's blockmgr-* dir keeps the old mtime of its launch
+    while fresh shuffle files are written deep inside it: it must
+    survive. A dir in which nothing is fresh is removed. Fails on a
+    reaper that reads only the top-level entry's mtime."""
+    now = os.lstat(tmp_path).st_mtime + 10 * S._SCRATCH_STALE_SEC
+    old = now - S._SCRATCH_STALE_SEC - 1
+    live = tmp_path / "blockmgr-live"
+    (live / "0c").mkdir(parents=True)
+    (live / "0c" / "shuffle_3_7_0.data").write_bytes(b"y")
+    dead = tmp_path / "blockmgr-dead"
+    (dead / "0c").mkdir(parents=True)
+    (dead / "0c" / "shuffle_1_2_0.data").write_bytes(b"y")
+    for p in (dead / "0c" / "shuffle_1_2_0.data", dead / "0c", dead, live / "0c", live):
+        os.utime(p, (old, old))
+    os.utime(live / "0c" / "shuffle_3_7_0.data", (now - 1, now - 1))
+    S._reap_stale_scratch(str(tmp_path), now=now)
+    assert (live / "0c" / "shuffle_3_7_0.data").exists()
+    assert not dead.exists()

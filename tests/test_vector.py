@@ -338,3 +338,75 @@ def test_mmr_select_skips_zero_vector_candidate(spark):
     ids = [t[1] for t in picked]
     assert 4 not in ids  # the zero vector is unselectable
     assert len(ids) == 3 and ids[0] == 1  # finite ranking intact
+
+
+def _score_bits(x):
+    """A score's identity: None for NULL, one class for every NaN (Spark
+    SQL treats all NaNs as equal, and their payload bits are not
+    preserved on the way out of the JVM), else the exact double bits."""
+    import struct
+
+    if x is None:
+        return None
+    return "nan" if x != x else struct.pack(">d", x)
+
+
+def test_cosine_to_bit_identical_to_three_fold_cosine(spark):
+    """cosine_to(name, q) — the query norm folded once on the driver,
+    two folds per row — gives the same double, bit for bit, as
+    cosine(col, query_vector_lit(q)) on every row: degenerate vectors
+    (zero, null, null element, wrong width, NaN / +-inf / subnormal /
+    -0.0 components), array<double> and array<float> columns, and
+    degenerate queries (zero, NaN element). The first query's norm is
+    exactly 1.0 under the sequential left fold, but a blocked or pairwise
+    sum (np.dot, np.linalg.norm) reads it as 1 + a few ulps, so a driver
+    fold in any other order fails this test."""
+    from pdf_using_hugging_face_and_vector_database_spark.functions.hashing import (
+        det_embed_py,
+    )
+    from pdf_using_hugging_face_and_vector_database_spark.functions.vector import (
+        cosine_to,
+        query_vector_lit,
+    )
+
+    d = 16
+    inf, nan = float("inf"), float("nan")
+    rows = [det_embed_py(f"row:{i}", d) for i in range(40)]
+    rows += [[float(x) * 3.5e-3 for x in det_embed_py("small", d)]]
+    rows += [
+        [0.0] * d,
+        None,
+        [1.0, None] + [0.5] * (d - 2),
+        [0.25] * (d - 1),
+        [0.25] * (d + 1),
+        [nan] + [0.5] * (d - 1),
+        [inf] + [0.5] * (d - 1),
+        [-inf, inf] + [0.5] * (d - 2),
+        [5e-324, -2.5e-310] + [0.0] * (d - 2),
+        [-0.0] * d,
+        [-0.0, 1.0] + [-0.0] * (d - 2),
+        [1e200, 1e-200] + [3.0] * (d - 2),
+    ]
+    df = spark.createDataFrame(
+        list(enumerate(rows)), "id int, v array<double>"
+    ).withColumn("f", F.col("v").cast("array<float>"))
+    queries = [
+        [1.0] + [2.0**-27] * (d - 1),
+        det_embed_py("query", d),
+        [x * 1e-3 for x in det_embed_py("q-small", d)],
+        [0.0] * d,
+        [nan] + [0.5] * (d - 1),
+        [inf] + [0.5] * (d - 1),
+        [5e-324] * d,
+        [-0.0] * d,
+    ]
+    for q in queries:
+        for c in ("v", "f"):
+            got = df.select(
+                "id",
+                cosine(F.col(c), query_vector_lit(q)).alias("old"),
+                cosine_to(c, q).alias("new"),
+            ).collect()
+            assert len(got) == len(rows)
+            for r in got:
+                assert _score_bits(r["new"]) == _score_bits(r["old"]), (q[:2], c, r)
